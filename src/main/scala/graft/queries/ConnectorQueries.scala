@@ -71,16 +71,27 @@ object ConnectorQueries {
     ss
   }
 
-  /** Remove a PRIOR run's per-invocation stream dirs (out_N / ckpt_N)
-    * under a gate's tmp base: these were only reclaimed by the next
-    * cache-miss rm(base), so a long-lived session invoking streaming
-    * gates repeatedly accumulated checkpoint/sink dirs without bound
-    * (ADVICE r20). Called at gate entry before the new run's dirs are
-    * created; bench/verify sessions run gates sequentially, so no live
-    * run's dirs can match. */
+  /** Names this process's stream run dirs (see [[runDir]]), so two
+    * processes sharing a tmp base never reclaim each other's dirs. */
+  private[queries] val runToken: String =
+    java.util.UUID.randomUUID().toString.take(8)
+
+  /** A per-invocation stream dir (`kind` = out / ckpt) under a gate's
+    * tmp base: `<kind>_<runToken>_<run>`. */
+  private[queries] def runDir(base: File, kind: String, run: Int): File =
+    new File(base, s"${kind}_${runToken}_$run")
+
+  /** Remove this process's PRIOR per-invocation stream dirs under a
+    * gate's tmp base: these were only reclaimed by the next cache-miss
+    * rm(base), so a long-lived session invoking streaming gates
+    * repeatedly accumulated checkpoint/sink dirs without bound (ADVICE
+    * r20). Called at gate entry before the new run's dirs are created;
+    * bench/verify sessions run gates sequentially, so none of this
+    * process's live runs can match, and another process's dirs (another
+    * [[runToken]]) — possibly a live checkpoint — are never touched. */
   private[queries] def cleanStreamRunDirs(base: File): Unit =
     Option(base.listFiles()).foreach(_.foreach { f =>
-      if (f.getName.matches("(out|ckpt)_\\d+")) {
+      if (f.getName.matches(s"(out|ckpt)_${runToken}_\\d+")) {
         def rm(g: File): Unit = {
           if (g.isDirectory) Option(g.listFiles()).foreach(_.foreach(rm))
           g.delete()
@@ -227,11 +238,11 @@ object ConnectorQueries {
       |FROM customer
       |ORDER BY c_custkey""".stripMargin
 
-  /** Columnar connector path (SURVEY §2.1 row 2): part pushed through a
-    * sharded write and read back on the `enableArrow=true` fast path —
-    * cells decode straight into OnHeapColumnVectors / ColumnarBatches,
-    * composed with row-range splits, hash-checked against the source
-    * table. Converts the columnar scan from spec-only to oracle-checked. */
+  /** Reference `enableArrow` option (SURVEY §2.1 row 2): part pushed
+    * through a sharded write and read back with `enableArrow=true`, which
+    * is accepted for reference compatibility and has no effect — the read
+    * takes the one row path, with every pushdown, composed with row-range
+    * splits, and is hash-checked against the source table. */
   def excelArrowRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val part = spark.read.parquet(s"$dir/part.parquet")
@@ -292,8 +303,8 @@ object ConnectorQueries {
     val in = new File(inPath)
     val run = streamRunCounter.incrementAndGet()
     cleanStreamRunDirs(base) // reclaim prior runs' dirs (ADVICE r20)
-    val out = new File(base, s"out_$run")
-    val ckpt = new File(base, s"ckpt_$run")
+    val out = runDir(base, "out", run)
+    val ckpt = runDir(base, "ckpt", run)
     val q = spark.readStream.format("excel").schema(supplier.schema)
       .load(in.getAbsolutePath)
       .withColumn("name_up", upper(col("s_name")))
@@ -351,7 +362,7 @@ object ConnectorQueries {
     val in = new File(inPath)
     val run = streamRunCounter.incrementAndGet()
     cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = runDir(base, "ckpt", run)
     val qname = s"excel_stream_window_${math.abs(dir.hashCode)}_$run"
     // window-agg state: 8 shuffle partitions instead of 32 cuts the
     // per-batch state-checkpoint fan-out 4x at identical results. The
@@ -427,7 +438,7 @@ object ConnectorQueries {
     val admit = stagedXlsxTotal(in)
     val run = streamRunCounter.incrementAndGet()
     cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = runDir(base, "ckpt", run)
     val qname = s"excel_stream_join_${math.abs(dir.hashCode)}_$run"
     val q = spark.readStream.format("excel").schema(docs.schema)
       .option("maxFilesPerTrigger", admit.toString)
@@ -551,7 +562,7 @@ object ConnectorQueries {
     val inL = new File(inLPath); val inR = new File(inRPath)
     val run = streamRunCounter.incrementAndGet()
     cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = runDir(base, "ckpt", run)
     val qname = s"excel_stream_stream_join_${math.abs(dir.hashCode)}_$run"
     // join state checkpoints one store PER shuffle partition PER side —
     // at this volume 32 partitions is pure small-file overhead (it
@@ -654,7 +665,7 @@ object ConnectorQueries {
     val in = new File(inPath)
     val run = streamRunCounter.incrementAndGet()
     cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = runDir(base, "ckpt", run)
     val qname = s"excel_stream_session_${math.abs(dir.hashCode)}_$run"
     // session state: private session + 8 shuffle partitions, same
     // state-store fan-out discipline as excel_stream_window
@@ -769,7 +780,7 @@ object ConnectorQueries {
     val shards = stagedShardCount(new File(in, "a"))
     val run = streamRunCounter.incrementAndGet()
     cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = runDir(base, "ckpt", run)
     val qname = s"excel_stream_cdc_${math.abs(dir.hashCode)}_$run"
     val ss = streamSession(spark)
     val q = ss.readStream.format("excel").schema(ins.schema)
@@ -866,7 +877,7 @@ object ConnectorQueries {
     val admit = stagedXlsxTotal(in)
     val run = streamRunCounter.incrementAndGet()
     cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = runDir(base, "ckpt", run)
     val qname = s"excel_stream_hll_${math.abs(dir.hashCode)}_$run"
     val ss = streamSession(spark)
     val q = graft.operators.Sketches.hllRegisters(
@@ -1008,7 +1019,7 @@ object ConnectorQueries {
     val admit = stagedXlsxTotal(in)
     val run = streamRunCounter.incrementAndGet()
     cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = runDir(base, "ckpt", run)
     val qname = s"excel_stream_fresh_${math.abs(dir.hashCode)}_$run"
     val ss = streamSession(spark)
     val q = ss.readStream.format("excel").schema(e.schema)
@@ -1108,7 +1119,7 @@ object ConnectorQueries {
     val admit = stagedXlsxTotal(in)
     val run = streamRunCounter.incrementAndGet()
     cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = runDir(base, "ckpt", run)
     val qname = s"excel_stream_quantile_${math.abs(dir.hashCode)}_$run"
     val ss = streamSession(spark)
     val q = graft.streaming.StreamingSketch.quantileSketch(
@@ -1249,7 +1260,7 @@ object ConnectorQueries {
     val admit = stagedXlsxTotal(in)
     val run = streamRunCounter.incrementAndGet()
     cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = runDir(base, "ckpt", run)
     val qname = s"excel_stream_hh_${math.abs(dir.hashCode)}_$run"
     val ss = streamSession(spark)
     val q = graft.streaming.StreamingHeavyHitters.countMin(
@@ -1347,7 +1358,7 @@ object ConnectorQueries {
     val shards = stagedShardCount(new File(in, "a"))
     val run = streamRunCounter.incrementAndGet()
     cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = runDir(base, "ckpt", run)
     val qname = s"excel_stream_late_${math.abs(dir.hashCode)}_$run"
     val ss = streamSession(spark)
     val q = graft.streaming.StreamingLateness.lateness(

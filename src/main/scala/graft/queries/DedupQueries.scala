@@ -716,7 +716,7 @@ object DedupQueries {
     val shards = ConnectorQueries.stagedShardCount(new File(in, "a"))
     val run = ConnectorQueries.streamRunCounter.incrementAndGet()
     ConnectorQueries.cleanStreamRunDirs(base) // ADVICE r20 dir reclaim
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = ConnectorQueries.runDir(base, "ckpt", run)
     val qname = s"d08_stream_dedup_${math.abs(dir.hashCode)}_$run"
     // dedup state checkpoints one store per shuffle partition per batch —
     // 8 keeps the stateful path exercised without the 32-partition
@@ -867,7 +867,7 @@ object DedupQueries {
     val in = new File(inPath)
     val shards = ConnectorQueries.stagedShardCount(new File(in, "a"))
     val run = ConnectorQueries.streamRunCounter.incrementAndGet()
-    val ckpt = new File(base, s"ckpt_$run")
+    val ckpt = ConnectorQueries.runDir(base, "ckpt", run)
     rm(ckpt)
     val qname = s"d16_stream_neardup_${math.abs(dir.hashCode)}_$run"
     // private session: lowered state fan-out stays scoped to this stream

@@ -5,6 +5,7 @@ import java.io.File
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import org.apache.spark.SparkException
 import org.apache.spark.sql.AnalysisException
 
 /** File listing + local-access helpers on the Hadoop FileSystem API.
@@ -116,20 +117,47 @@ object ExcelFiles {
     (here ++ below).sortBy(_.uri)
   }
 
+  /** An open workbook: the reader plus the local file it reads. `close`
+    * closes the reader, then deletes the local file when it is a staged
+    * copy of a remote object. */
+  final class Workbook private[ExcelFiles] (val reader: XlsxReader,
+      local: File, staged: Boolean) extends java.io.Closeable {
+    override def close(): Unit =
+      try reader.close() finally if (staged) local.delete()
+  }
+
   /** Open an xlsx for random access. ZIP needs a seekable local file, so a
     * remote (hdfs/s3) object is staged to a local temp file first — bounded
     * by the format's own ~1M-row ceiling, and per-task, so it scales with
-    * the cluster. Returns (file, deleteAfter). */
-  def toLocal(pathStr: String, conf: Configuration): (File, Boolean) = {
+    * the cluster. A workbook that fails to open (corrupt, not a zip) has
+    * its staged copy deleted and surfaces as a `SparkException` naming
+    * `pathStr` (the reference wraps all read failures,
+    * connector.py:202-203). The caller owns the returned [[Workbook]]. */
+  def open(pathStr: String, conf: Configuration): Workbook = {
     val path = new Path(pathStr)
     val fs = path.getFileSystem(conf)
-    fs.getScheme match {
-      case "file" =>
-        (new File(path.toUri.getPath), false)
+    val (local, staged) = fs.getScheme match {
+      case "file" => (new File(path.toUri.getPath), false)
       case _ =>
         val tmp = File.createTempFile("graft-excel-stage", ".xlsx")
-        fs.copyToLocalFile(false, path, new Path(tmp.getAbsolutePath), true)
+        try fs.copyToLocalFile(false, path, new Path(tmp.getAbsolutePath), true)
+        catch { case e: Throwable => tmp.delete(); throw e }
         (tmp, true)
     }
+    try new Workbook(new XlsxReader(local), local, staged)
+    catch {
+      case e: Exception =>
+        if (staged) local.delete()
+        throw new SparkException(
+          s"Failed to open excel file $pathStr: ${e.getMessage}", e)
+    }
+  }
+
+  /** [[open]] `pathStr`, run `body` on its reader, and always close the
+    * workbook (reader closed, staged copy deleted). */
+  def withReader[T](pathStr: String, conf: Configuration)(
+      body: XlsxReader => T): T = {
+    val wb = open(pathStr, conf)
+    try body(wb.reader) finally wb.close()
   }
 }

@@ -8,8 +8,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * pyspark_datasource/excel/connector.py:71-76,144,183,307-311`):
   * `path` (required), `sheetName` (read default: sheet index "0"; write
   * default "Sheet1"), `header` (default true), `inferSchema` (default true),
-  * `enableArrow` (accepted for compatibility; the JVM reader is always
-  * columnar-agnostic so it is a no-op here).
+  * `enableArrow` (accepted for reference compatibility and has no effect:
+  * the reference's Arrow branch avoids per-row pickling on a Python→JVM
+  * hop this in-JVM scan does not have, so every read takes the one row
+  * path and every scan pushdown applies).
   *
   * Extensions (documented deviations): `inferSampleRows` bounds the schema-
   * inference scan (the reference probes pandas with `nrows=0`), and options
@@ -48,10 +50,6 @@ final case class ExcelOptions(options: Map[String, String]) {
 
   /** Max files to probe when inferring over a directory (extension). */
   def inferSampleFiles: Int = get("infersamplefiles").map(_.toInt).getOrElse(1)
-
-  /** Columnar read path (the reference's Arrow RecordBatch branch,
-    * connector.py:183; default false there and here). */
-  def enableArrow: Boolean = get("enablearrow").exists(_.toBoolean)
 
   /** Streaming admission control: max new files admitted per micro-batch
     * (extension; unset = all available; must be positive, matching

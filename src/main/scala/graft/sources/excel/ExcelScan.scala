@@ -73,16 +73,15 @@ class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
     * above: an `ORDER BY col LIMIT n` over a TB of sheets decodes
     * everything (filter/sample still see every row) but ships only
     * n·partitions rows into the sort. Declines non-column sort keys,
-    * unorderable types, the columnar path, and scans already claimed by
-    * aggregates or an accepted OFFSET (the reader's offset skip is
-    * defined on raw sheet order, not sorted order). */
+    * unorderable types, and scans already claimed by aggregates or an
+    * accepted OFFSET (the reader's offset skip is defined on raw sheet
+    * order, not sorted order). */
   override def pushTopN(orders: Array[
       org.apache.spark.sql.connector.expressions.SortOrder],
       limit: Int): Boolean = {
     import org.apache.spark.sql.connector.expressions.{NamedReference,
       NullOrdering, SortDirection}
-    if (limit <= 0 || opts.enableArrow || pushedAggs.nonEmpty || offset > 0)
-      return false
+    if (limit <= 0 || pushedAggs.nonEmpty || offset > 0) return false
     val keys = orders.toSeq.map { so =>
       so.expression() match {
         case nr: NamedReference if nr.fieldNames().length == 1 =>
@@ -105,10 +104,10 @@ class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
   /** OFFSET pushdown is COMPLETE when accepted (Spark removes the Offset
     * operator), so accept ONLY when this scan provably plans exactly one
     * partition whose output order is the sheet's dense row order: a
-    * single listed file, one sheet, no row-range splits, no columnar
-    * batches, and no filters anywhere (Spark offers pushOffset only with
-    * no Filter between Offset and the relation; ours all stay post-scan,
-    * so a filtered query never reaches here — the guard is defensive).
+    * single listed file, one sheet, no row-range splits, and no filters
+    * anywhere (Spark offers pushOffset only with no Filter between Offset
+    * and the relation; ours all stay post-scan, so a filtered query never
+    * reaches here — the guard is defensive).
     * The reader then skips the first `offset` data rows without
     * converting or emitting them. Multi-file scans decline: cross-
     * partition row order is not defined, exactly why generic file
@@ -119,8 +118,8 @@ class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
     // would skip `offset` raw rows where SQL semantics demand `offset`
     // SAMPLED rows. One of the two must stay an operator; sample won.
     if (opts.allSheets || opts.maxRowsPerPartition.nonEmpty ||
-      opts.enableArrow || pushed.nonEmpty || pushedAggs.nonEmpty ||
-      sample.nonEmpty || topN.nonEmpty) return false
+      pushed.nonEmpty || pushedAggs.nonEmpty || sample.nonEmpty ||
+      topN.nonEmpty) return false
     val single =
       try {
         val conf = SparkSession.active.sessionState.newHadoopConf()
@@ -143,14 +142,13 @@ class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
     * sequence is seeded per (seed, file, startRow), so task retries and
     * repeated actions over the same scan reproduce the same sample.
     * Declines replacement sampling (Poisson multiplicities don't fit a
-    * keep/drop reader loop) and the columnar path. Sampling composes
+    * keep/drop reader loop). Sampling composes
     * per-partition, so multi-file directories and row-range splits all
     * qualify — unlike OFFSET, no cross-partition order is involved. */
   override def pushTableSample(lowerBound: Double, upperBound: Double,
       withReplacement: Boolean, seed: Long): Boolean = {
     // offset == 0 is defensive (Spark pushes sample first; see pushOffset)
-    if (withReplacement || opts.enableArrow || pushedAggs.nonEmpty ||
-      offset > 0) return false
+    if (withReplacement || pushedAggs.nonEmpty || offset > 0) return false
     sample = Some(ExcelSample(lowerBound, upperBound, seed))
     true
   }
@@ -346,19 +344,9 @@ case class ExcelCountReaderFactory(opts: ExcelOptions,
       private var done = false
       override def next(): Boolean = !done && { done = true; true }
       override def get(): InternalRow = {
-        val (local, temp) = ExcelFiles.toLocal(filePath, conf.value)
-        val n =
-          try {
-            val rd =
-              try new XlsxReader(local)
-              catch {
-                case e: Exception => throw new org.apache.spark.SparkException(
-                  s"Failed to open excel file $filePath: ${e.getMessage}", e)
-              }
-            try rd.lastRowNumber(rd.resolveSheet(opts.sheetName),
-              trustDimension = false)
-            finally rd.close()
-          } finally if (temp) local.delete()
+        val n = ExcelFiles.withReader(filePath, conf.value)(rd =>
+          rd.lastRowNumber(rd.resolveSheet(opts.sheetName),
+            trustDimension = false))
         val dataRows = math.max(0L, n.toLong - (if (opts.header) 1L else 0L))
         new GenericInternalRow(Array[Any](dataRows))
       }
@@ -707,7 +695,7 @@ object ExcelSplitPlanner {
       conf: org.apache.hadoop.conf.Configuration)(
       body: (String, XlsxReader) => Seq[T]): Seq[T] = {
     if (files.lengthCompare(1) <= 0)
-      return files.flatMap(f => probe(f, conf)(rd => body(f, rd)))
+      return files.flatMap(f => ExcelFiles.withReader(f, conf)(body(f, _)))
     val parallelism = math.min(files.size,
       math.min(Runtime.getRuntime.availableProcessors(), 16))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
@@ -715,7 +703,7 @@ object ExcelSplitPlanner {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       val futures = files.map { f =>
-        scala.concurrent.Future(probe(f, conf)(rd => body(f, rd)))
+        scala.concurrent.Future(ExcelFiles.withReader(f, conf)(body(f, _)))
       }
       try
         futures.flatMap(fu =>
@@ -747,20 +735,6 @@ object ExcelSplitPlanner {
       case IsNotNull(ExcelSchema.SheetColumn) => true // synthesized, never null
       case _ => true
     }
-  }
-
-  private def probe[T](f: String, conf: org.apache.hadoop.conf.Configuration)(
-      body: XlsxReader => T): T = {
-    val (local, temp) = ExcelFiles.toLocal(f, conf)
-    try {
-      val rd =
-        try new XlsxReader(local)
-        catch {
-          case e: Exception => throw new org.apache.spark.SparkException(
-            s"Failed to open excel file $f: ${e.getMessage}", e)
-        }
-      try body(rd) finally rd.close()
-    } finally if (temp) local.delete()
   }
 
   /** Split one sheet into row-range partitions of at most `maxRows` data
@@ -814,18 +788,6 @@ case class ExcelPartitionReaderFactory(fullSchema: StructType,
       case _ => base
     }
   }
-
-  // columnar fast path — the reference's enableArrow branch, in-JVM
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    opts.enableArrow
-
-  override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[ExcelInputPartition]
-    new ExcelColumnarPartitionReader(p.filePath,
-      fullSchema, requiredSchema, opts, limit, conf.value, filters,
-      startRow = p.startRow, endRowExcl = p.endRowExcl, sheetOverride = p.sheet)
-  }
 }
 
 /** Streams one file's chosen sheet as InternalRows, converting only the
@@ -876,25 +838,20 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
       .orderedFilters(applicable.toSeq, requiredSchema))
   }
 
-  private val (localFile, isTemp) = ExcelFiles.toLocal(filePath, conf)
-  // error normalization (reference wraps all read failures, connector.py:
-  // 202-203): corrupt/non-zip files surface as SparkException with the path
-  private val reader =
-    try new XlsxReader(localFile)
-    catch {
-      case e: Exception =>
-        if (isTemp) localFile.delete()
-        throw new org.apache.spark.SparkException(
-          s"Failed to open excel file $filePath: ${e.getMessage}", e)
-    }
+  private val workbook = ExcelFiles.open(filePath, conf)
+  // a bad sheet or a missing column fails here, before Spark holds the
+  // reader to close it — so release the workbook on the way out
+  private val (sheetNameValue, indices, rowIter) =
+    try resolve(workbook.reader)
+    catch { case e: Throwable => workbook.close(); throw e }
 
-  private val resolvedSheet = reader.resolveSheet(
-    if (sheetOverride != null) sheetOverride else opts.sheetName)
-  private val sheetNameValue =
-    org.apache.spark.unsafe.types.UTF8String.fromString(resolvedSheet.name)
-
-  private val (indices: Array[Int], rowIter: Iterator[Array[Any]]) = {
-    val sheet = resolvedSheet
+  /** Resolve the sheet, map required fields to sheet columns, and open
+    * the data-row iterator (offset and raw limit applied). */
+  private def resolve(reader: XlsxReader): (
+      org.apache.spark.unsafe.types.UTF8String, Array[Int],
+      Iterator[Array[Any]]) = {
+    val sheet = reader.resolveSheet(
+      if (sheetOverride != null) sheetOverride else opts.sheetName)
     // ranged partition: the header (dense row 1) is outside the data range,
     // so it is read through its own short-range stream; the data stream
     // then decodes only [startRow, endRowExcl)
@@ -951,7 +908,8 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
     // no pushed sample; with either, the limit must count KEPT rows (see
     // `kept` in next()) or qualifying rows beyond the first `limit` raw
     // rows would be dropped
-    (colIndex,
+    (org.apache.spark.unsafe.types.UTF8String.fromString(sheet.name),
+      colIndex,
       if (limit >= 0 && structFilters.isEmpty && sample.isEmpty)
         offsetIter.take(limit)
       else offsetIter)
@@ -1014,8 +972,5 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
 
   override def get(): InternalRow = current
 
-  override def close(): Unit = {
-    reader.close()
-    if (isTemp) localFile.delete()
-  }
+  override def close(): Unit = workbook.close()
 }

@@ -101,16 +101,16 @@ object ExcelSchema {
     * error normalization (connector.py:93-94). */
   def inferFromFile(filePath: String, opts: ExcelOptions,
       conf: Configuration): StructType = {
-    val (file, temp) = ExcelFiles.toLocal(filePath, conf)
-    val reader =
-      try new XlsxReader(file)
+    val wb =
+      try ExcelFiles.open(filePath, conf)
       catch {
-        case e: Exception =>
-          if (temp) file.delete()
+        case e: org.apache.spark.SparkException =>
           throw new org.apache.spark.sql.AnalysisException(
             errorClass = "UNABLE_TO_INFER_SCHEMA",
-            messageParameters = Map("format" -> s"excel ($filePath: ${e.getMessage})"))
+            messageParameters = Map("format" ->
+              s"excel ($filePath: ${e.getCause.getMessage})"))
       }
+    val reader = wb.reader
     try {
       if (opts.allSheets) {
         // every sheet probed, schemas merged, `_sheet` column appended.
@@ -124,10 +124,7 @@ object ExcelSchema {
             else f))
         else merged.add(SheetColumn, StringType, nullable = true)
       } else inferSheet(reader, reader.resolveSheet(opts.sheetName), opts)
-    } finally {
-      reader.close()
-      if (temp) file.delete()
-    }
+    } finally wb.close()
   }
 
   /** Synthesized sheet-name column for `sheetName="*"` reads. */

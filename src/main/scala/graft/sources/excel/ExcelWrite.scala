@@ -145,12 +145,6 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
     // stage under a dot-prefixed sibling and rename: a concurrent directory
     // reader never lists a half-written workbook
     val staging = new Path(target.getParent, s".${target.getName}.inprogress")
-    def mergeTempInto(writer: XlsxWriter, tempPath: String): Unit = {
-      val (local, temp) = ExcelFiles.toLocal(tempPath, conf)
-      val r = new XlsxReader(local)
-      try r.rowIterator(r.sheets.head).foreach(row => writer.writeRow(row.toSeq))
-      finally { r.close(); if (temp) local.delete() }
-    }
     try {
       if (opts.sheetColumn.isEmpty) {
         val parts = messages.collect { case m: ExcelCommitMessage => m }
@@ -159,7 +153,7 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
           opts.widthsFor(schema.fieldNames.toIndexedSeq))
         try {
           if (opts.header) ExcelWrite.header(writer, schema.fieldNames.toIndexedSeq, opts)
-          parts.foreach(m => mergeTempInto(writer, m.tempPath))
+          parts.foreach(m => ExcelWrite.appendTemp(writer, m.tempPath, conf))
         } finally writer.close()
       } else {
         // sheet-routed merge: one sheet per distinct routing value (sheet
@@ -193,7 +187,7 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
             if (i > 0) writer.startSheet(s)
             if (opts.header) ExcelWrite.header(writer, dataNames.toIndexedSeq, opts)
             parts.foreach(_.sheets.collect {
-              case (`s`, tempPath) => mergeTempInto(writer, tempPath)
+              case (`s`, tempPath) => ExcelWrite.appendTemp(writer, tempPath, conf)
             })
           }
         } finally writer.close()
@@ -226,6 +220,13 @@ object ExcelWrite {
   private[excel] def header(w: XlsxWriter, names: Seq[String],
       opts: ExcelOptions): Unit =
     if (opts.headerBold) w.writeHeaderRow(names) else w.writeRow(names)
+
+  /** Driver-side merge step: copy every row of a task's temp workbook
+    * (its first sheet) onto `w`, the final workbook being written. */
+  private[excel] def appendTemp(w: XlsxWriter, tempPath: String,
+      conf: org.apache.hadoop.conf.Configuration): Unit =
+    ExcelFiles.withReader(tempPath, conf)(r =>
+      r.rowIterator(r.sheets.head).foreach(row => w.writeRow(row.toSeq)))
 
   private val ForbiddenSheetChars = ":\\/?*[]"
 
@@ -303,12 +304,7 @@ class ExcelStreamingWrite(schema: StructType, opts: ExcelOptions)
       opts.widthsFor(schema.fieldNames.toIndexedSeq))
     try {
       if (opts.header) ExcelWrite.header(writer, schema.fieldNames.toIndexedSeq, opts)
-      parts.foreach { m =>
-        val (local, temp) = ExcelFiles.toLocal(m.tempPath, conf)
-        val r = new XlsxReader(local)
-        try r.rowIterator(r.sheets.head).foreach(row => writer.writeRow(row.toSeq))
-        finally { r.close(); if (temp) local.delete() }
-      }
+      parts.foreach(m => ExcelWrite.appendTemp(writer, m.tempPath, conf))
     } finally {
       writer.close()
       fs.delete(new Path(tmpDir(epochId)), true)

@@ -66,14 +66,21 @@ class StagingInfraSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("cleanStreamRunDirs: reclaims prior runs' out_N/ckpt_N, keeps " +
     "everything else") {
     val base = Files.createTempDirectory("graft_rundir_spec").toFile
-    Seq("out_3", "ckpt_3", "ckpt_12", "in").foreach { n =>
-      val d = new File(base, n); d.mkdirs()
+    val own = Seq(ConnectorQueries.runDir(base, "out", 3),
+      ConnectorQueries.runDir(base, "ckpt", 3),
+      ConnectorQueries.runDir(base, "ckpt", 12))
+    // run dirs this process did not create — another token's, or an
+    // untokened one from an older build — may be a concurrent process's
+    // live checkpoint and must survive
+    val other = Seq("out_0ther_3", "ckpt_0ther_12", "ckpt_7")
+      .map(new File(base, _))
+    (own ++ other :+ new File(base, "in")).foreach { d =>
+      d.mkdirs()
       Files.write(new File(d, "f").toPath, Array[Byte](1))
     }
     ConnectorQueries.cleanStreamRunDirs(base)
-    assert(!new File(base, "out_3").exists())
-    assert(!new File(base, "ckpt_3").exists())
-    assert(!new File(base, "ckpt_12").exists())
+    own.foreach(d => assert(!d.exists(), s"$d should be reclaimed"))
+    other.foreach(d => assert(d.exists(), s"$d belongs to another process"))
     assert(new File(base, "in").exists(), "non-run dirs are untouched")
   }
 }

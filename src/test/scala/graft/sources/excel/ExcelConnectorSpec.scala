@@ -423,18 +423,30 @@ class ExcelConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.collect().map(_.getString(0)).toSet == Set("Alice", "Bob"))
   }
 
-  test("enableArrow=true: columnar read returns identical results") {
+  test("enableArrow=true: same rows, row plan, all pushdowns apply") {
     val dir = tmpDir()
-    sampleFile(dir, "col1.xlsx", Seq(1 -> "Alice", 2 -> "Bob"))
+    val f1 = sampleFile(dir, "col1.xlsx", Seq(1 -> "Alice", 2 -> "Bob"))
     sampleFile(dir, "col2.xlsx", Seq(3 -> "Carol"))
+    def read(path: String) = spark.read.format("excel").schema(idName)
+      .option("enableArrow", "true").load(path)
     val rowDf = spark.read.format("excel").schema(idName)
       .load(dir.getAbsolutePath)
-    val colDf = spark.read.format("excel").schema(idName)
-      .option("enableArrow", "true").load(dir.getAbsolutePath)
-    val plan = colDf.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"), s"columnar path not planned:\n$plan")
-    assert(colDf.collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
+    val arrowDf = read(dir.getAbsolutePath)
+    val plan = arrowDf.queryExecution.executedPlan.toString
+    assert(!plan.contains("ColumnarToRow"), s"columnar path planned:\n$plan")
+    assert(arrowDf.collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
       rowDf.collect().map(r => (r.getInt(0), r.getString(1))).toSet)
+    def planOf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString
+    val topN = arrowDf.orderBy("id").limit(1)
+    assert(planOf(topN).contains("PushedTopN=[id ASC"), planOf(topN))
+    assert(topN.collect().map(_.getInt(0)).toSeq == Seq(1))
+    val page = read(f1.getAbsolutePath).offset(1)
+    assert(planOf(page).contains("PushedOffset=1"), planOf(page))
+    assert(page.collect().map(_.getInt(0)).toSeq == Seq(2))
+    val sampled = arrowDf.sample(withReplacement = false, 0.5, 11L)
+    assert(planOf(sampled).contains("PushedSample=[0.0,0.5,seed=11]"),
+      planOf(sampled))
   }
 
   test("enableArrow=true round-trips all six types") {
@@ -551,10 +563,19 @@ class ExcelConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir()
     val f = new File(dir, "garbage.xlsx")
     java.nio.file.Files.write(f.toPath, "this is not a zip".getBytes)
-    // read path with schema → SparkException naming the file
-    val df = spark.read.format("excel").schema(idName).load(f.getAbsolutePath)
-    val e = intercept[Exception](df.collect())
-    assert(msgs(e).exists(_.contains("garbage.xlsx")), e.toString)
+    // every read path that opens the workbook → an error naming the file:
+    // row scan, count pushdown, split planning, enableArrow=true
+    def read(opts: (String, String)*) = spark.read.format("excel")
+      .schema(idName).options(opts.toMap).load(f.getAbsolutePath)
+    val reads: Seq[(String, () => Any)] = Seq(
+      "scan" -> (() => read().collect()),
+      "count" -> (() => read().count()),
+      "split" -> (() => read("maxRowsPerPartition" -> "10").collect()),
+      "enableArrow" -> (() => read("enableArrow" -> "true").collect()))
+    reads.foreach { case (what, run) =>
+      val e = intercept[Exception](run())
+      assert(msgs(e).exists(_.contains("garbage.xlsx")), s"$what: $e")
+    }
     // inference path → AnalysisException (reference error normalization)
     intercept[AnalysisException](
       spark.read.format("excel").load(f.getAbsolutePath))

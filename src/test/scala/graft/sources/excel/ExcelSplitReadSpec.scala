@@ -92,7 +92,7 @@ class ExcelSplitReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.count() == 10)
   }
 
-  test("split read composes with the columnar (enableArrow) path") {
+  test("split read composes with the enableArrow option") {
     val f = bigFile(tmpDir(), rows = 500)
     val df = spark.read.format("excel").schema(idName)
       .option("enableArrow", "true")
