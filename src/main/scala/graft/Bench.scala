@@ -545,7 +545,9 @@ object Bench {
     // value_with_prep adds back prep_build_s plus the staging seconds NOT
     // already inside the reported per-gate minima, so the tracked
     // cross-round number counts every second of work the suite actually
-    // performed. BASELINE.md tracks value_with_prep from r21 on.
+    // performed. BASELINE.md tracks value_with_prep from r21 on. The two
+    // buckets are disjoint: SharedPrep leaves staging that runs inside a
+    // build out of prep_build_s.
     val stagingTotalS = (GateMetrics.snapshot() - stagingSnapT0) / 1e9
     val stagingReportedS = stageByGate.values.sum
     val stagingExcludedS = math.max(0.0, stagingTotalS - stagingReportedS)

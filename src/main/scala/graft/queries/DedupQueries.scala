@@ -650,8 +650,8 @@ object DedupQueries {
 
   // ---------------------------------------------------------------- d08
   /** STREAMING first-occurrence dedup, oracle-checked. Two excel batches
-    * staged in controlled discovery order (listing is name-sorted;
-    * maxFilesPerTrigger=1 → one file per micro-batch): batch a = docs with
+    * staged in controlled discovery order (per-batch admission → one
+    * staged batch per micro-batch): batch a = docs with
     * doc_id % 3 = 0, batch b = ALL docs plus an exact copy of every 10th
     * doc under id + 10⁶. The fnv1a64-keyed stateful dedup must suppress
     * batch-b re-occurrences of batch-a keys (cross-batch state) and
@@ -664,81 +664,20 @@ object DedupQueries {
     * semantics). Planted copies can never win: they ride batch b with
     * ids above every original. */
   def d08StreamingDedup(spark: SparkSession, dir: String): DataFrame = {
-    import java.io.File
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_stream_dedup_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
     val batch1 = d.filter(pmod(col("doc_id"), lit(3)) === 0)
     val copies = d.filter(pmod(col("doc_id"), lit(10)) === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    val batch2 = d.unionByName(copies)
-    // two-batch xlsx staging ONCE per (session, corpus) — the ssjoin/cdc
-    // pattern: both batches are pure functions of the corpus (batch-b is
-    // the FULL corpus, the gate's dominant staging cost), so a session
-    // encodes them once; stream checkpoint + sink name stay fresh per
-    // invocation (a reused AvailableNow checkpoint would admit zero new
-    // files and return an empty table). Each batch is SHARDED into
-    // `shards` files inside its own subdirectory so the per-batch xlsx
-    // decode runs `shards`-parallel instead of on one task (a
-    // coalesce(1) sheet was the gate's single-task bottleneck); batch
-    // ORDER is unchanged — admission is a name-ordered prefix and every
-    // ".../a/part-*" path sorts before ".../b/part-*", so with
-    // maxFilesPerTrigger = shards micro-batch 1 is exactly batch a and
-    // micro-batch 2 exactly batch b. Within-batch dups were already
-    // resolved by the operator's min-doc_id tiebreak, shard-split or not.
-    val Seq(inPath) = ConnectorQueries.cachedStaging(
-        spark, s"d08Stage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      val k = ConnectorQueries.streamBatchShards(batch2)
-      batch1.repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "a").getAbsolutePath)
-      batch2.repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "b").getAbsolutePath)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    // per-batch admission count = batch a's staged shard fan-out (read
-    // off the listing so cache hits never re-count the corpus). ADVICE
-    // r20 suggested max(a, b); REJECTED for this order-pinned gate:
-    // admission is a name-ordered PREFIX, so a count larger than a's
-    // would let micro-batch 1 straddle a + the head of b (order broken),
-    // while a's count at worst splits an oversized b across extra
-    // micro-batches (order preserved). a and b stage the same k today,
-    // and cachedStaging now validates the staged file count on every hit.
-    val shards = ConnectorQueries.stagedShardCount(new File(in, "a"))
-    val run = ConnectorQueries.streamRunCounter.incrementAndGet()
-    ConnectorQueries.cleanStreamRunDirs(base) // ADVICE r20 dir reclaim
-    val ckpt = ConnectorQueries.runDir(base, "ckpt", run)
-    val qname = s"d08_stream_dedup_${math.abs(dir.hashCode)}_$run"
-    // dedup state checkpoints one store per shuffle partition per batch —
-    // 8 keeps the stateful path exercised without the 32-partition
-    // small-file fan-out (result is partition-count independent). The
-    // stream runs on a PRIVATE session (own SQLConf over the shared
-    // context) so the lowered conf can't leak into queries running
-    // concurrently on the caller's session.
-    val ss = ConnectorQueries.streamSession(spark)
-    val q = ss.readStream.format("excel").schema(d.schema)
-      .option("maxFilesPerTrigger", shards.toString)
-      .option("recursiveFileLookup", "true")
-      .load(in.getAbsolutePath)
-      .withColumn("fp", graft.functions.TextExpressions.fnv1a64(col("text")))
-      .transform(df =>
-        graft.streaming.StreamingDedup.firstOccurrence(df, "fp", "doc_id"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(qname)
+    // per-batch admission: micro-batch 1 is exactly batch a, 2 exactly
+    // batch b; within-batch dups resolve by the operator's min-doc_id
+    // tiebreak, shard-split or not
+    StreamGate.run(spark, dir, "graft_stream_dedup", StreamGate.PerBatch)(
+        Seq(batch1, d.unionByName(copies))) { in =>
+      in.read(d.schema)
+        .withColumn("fp", graft.functions.TextExpressions.fnv1a64(col("text")))
+        .transform(df =>
+          graft.streaming.StreamingDedup.firstOccurrence(df, "fp", "doc_id"))
+    }.table
       .select(col("doc_id"), md5(col("text").cast("binary")).as("fp"))
       .orderBy("doc_id")
   }
@@ -832,60 +771,15 @@ object DedupQueries {
     * ties resolve by id inside the operator), which is what makes the
     * streaming "earlier arrival" relation SQL-expressible as `a < b`. */
   def d16StreamingNearDup(spark: SparkSession, dir: String): DataFrame = {
-    import java.io.File
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_stream_neardup_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
     val copies = d.filter(pmod(col("doc_id"), lit(25)) === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    // two-batch xlsx staging ONCE per (session, corpus) — the ssjoin/cdc
-    // pattern (batch-a is the FULL corpus encode, the gate's dominant
-    // staging cost); stream checkpoint + sink name fresh per invocation.
-    // Batches are sharded into per-batch subdirectories so decode runs
-    // `shards`-parallel; name-ordered prefix admission with
-    // maxFilesPerTrigger = shards keeps micro-batch 1 = a, 2 = b (the
-    // d08 rationale — arrival ORDER is batch-level; within-batch ties
-    // already resolve by id inside the operator).
-    val Seq(inPath) = ConnectorQueries.cachedStaging(
-        spark, s"d16Stage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      val k = ConnectorQueries.streamBatchShards(d)
-      d.repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "a").getAbsolutePath)
-      copies.repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "b").getAbsolutePath)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    val shards = ConnectorQueries.stagedShardCount(new File(in, "a"))
-    val run = ConnectorQueries.streamRunCounter.incrementAndGet()
-    val ckpt = ConnectorQueries.runDir(base, "ckpt", run)
-    rm(ckpt)
-    val qname = s"d16_stream_neardup_${math.abs(dir.hashCode)}_$run"
-    // private session: lowered state fan-out stays scoped to this stream
-    // (same rationale as d08)
-    val ss = ConnectorQueries.streamSession(spark)
-    val stream = ss.readStream.format("excel").schema(d.schema)
-      .option("maxFilesPerTrigger", shards.toString)
-      .option("recursiveFileLookup", "true")
-      .load(in.getAbsolutePath)
-    val q = graft.streaming.StreamingDedup
-      .nearDupHits(stream, "doc_id", "text")
-      .writeStream.outputMode("append")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val verdict = ss.table(qname)
+    // per-batch admission: arrival ORDER is batch-level (micro-batch 1 =
+    // a, 2 = b); within-batch ties already resolve by id in the operator
+    val verdict = StreamGate.run(spark, dir, "graft_stream_neardup",
+        StreamGate.PerBatch)(Seq(d, copies)) { in =>
+      graft.streaming.StreamingDedup.nearDupHits(in.read(d.schema), "doc_id", "text")
+    }.table
       .groupBy("doc_id")
       .agg(min(struct(col("dup_of"), col("est_j"))).as("m"))
       .select(col("doc_id"), col("m.dup_of").as("dup_of"),

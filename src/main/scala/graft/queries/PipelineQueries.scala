@@ -721,13 +721,8 @@ object PipelineQueries {
     // refuses with LOCATION_ALREADY_EXISTS on the next run
     Seq(oT, cT).foreach { tbl =>
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      val wh = new java.io.File(java.net.URI.create(
-        spark.conf.get("spark.sql.warehouse.dir")).getPath, tbl)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(wh)
+      StreamGate.rmTree(new java.io.File(java.net.URI.create(
+        spark.conf.get("spark.sql.warehouse.dir")).getPath, tbl))
     }
     spark.read.parquet(s"$dir/orders.parquet")
       .select(col("o_custkey"), col("o_totalprice"))

@@ -163,4 +163,15 @@ class SharedPrepSpec extends AnyFunSuite with BeforeAndAfterAll {
     SharedPrep.cached(spark, "sps-buildsec")(Seq(2).toDF("x"))
     assert(SharedPrep.buildSeconds(spark) == mid, "hits cost nothing")
   }
+
+  test("staging inside a build counts in GateMetrics, not in buildSeconds") {
+    val staged0 = GateMetrics.snapshot()
+    val before = SharedPrep.buildSeconds(spark)
+    SharedPrep.cached(spark, "sps-staged-build") {
+      GateMetrics.staged(Thread.sleep(500)); "built"
+    }
+    assert(GateMetrics.snapshot() - staged0 >= 500000000L)
+    val build = SharedPrep.buildSeconds(spark) - before
+    assert(build < 0.25, s"staging counted again as build time: $build s")
+  }
 }

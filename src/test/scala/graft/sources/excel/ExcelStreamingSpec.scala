@@ -103,6 +103,27 @@ class ExcelStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.table("an_out").count() == 3)
     val batches = q.recentProgress.count(_.numInputRows > 0)
     assert(batches >= 3, s"AvailableNow ignored the limit: $batches batches")
+
+    // without the limit, AvailableNow drains a nested backlog (batches in
+    // subdirs a/, b/) in ONE micro-batch
+    val nested = Files.createTempDirectory("graft-an-nested").toFile
+    val ck2 = Files.createTempDirectory("graft-an-nested-ck").toFile
+    Seq("a" -> (1 to 2), "b" -> (3 to 5)).foreach { case (sub, ids) =>
+      val d = new File(nested, sub); d.mkdirs()
+      ids.foreach(i => writeFile(d, s"h$i.xlsx", Seq(i -> s"n$i")))
+    }
+    val all = spark.readStream.format("excel").schema(idName)
+      .option("recursiveFileLookup", "true")
+      .load(nested.getAbsolutePath)
+      .writeStream.format("memory").queryName("an_all_out")
+      .option("checkpointLocation", ck2.getAbsolutePath)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    all.awaitTermination(60000)
+    assert(spark.table("an_all_out").collect().map(_.getInt(0)).sorted.toSeq
+      == (1 to 5))
+    assert(all.recentProgress.count(_.numInputRows > 0) == 1,
+      all.recentProgress.map(_.numInputRows).mkString(","))
   }
 
   test("maxBytesPerTrigger drains a backlog in volume-bounded batches") {
